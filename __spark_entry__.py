@@ -54,8 +54,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ flagship).
 
     Key order is the driver-verification schedule: never-driver-green
-    keys rotate to the front of the (capped) CORRECTNESS window each
-    round — see ``rotate_unchecked_first``.
+    keys rotate to the front of the (capped) CORRECTNESS window, green
+    keys follow in registry order — see ``rotate_unchecked_first``.
     """
     regs = {name: _shipped(qd.fn) for name, qd in all_queries().items()}
     regs["flagship"] = _shipped(flagship)

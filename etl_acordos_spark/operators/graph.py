@@ -146,7 +146,6 @@ def triangle_counts(
     k: int = 20,
     broadcast_edges: bool | None = None,
     broadcast_max_edges: int = 20_000_000,
-    hybrid_core_max_cells: int | None = None,
 ) -> DataFrame:
     """Top-k vertices by triangle participation over an undirected
     edge list (src < dst, distinct).
@@ -158,52 +157,17 @@ def triangle_counts(
     exactly (the oracle's formulation). Ties at the top-k boundary
     break by vertex id — the returned row SET is deterministic.
 
-    ``broadcast_edges=True`` (r12 shape) closes wedges by ADJACENCY
-    INTERSECTION: one broadcast of the per-vertex oriented neighbor
-    lists and one `array_intersect` per edge — O(d_u + d_w) ≤ O(√m)
-    work per edge with no wedge-stream materialization at all; only
-    (vertex, partial count) pairs hit the exchange. This halves the
-    sf0.1 wedge phase vs the previous broadcast wedge-join (which
-    generated the O(Σ outdeg²) stream — 34× the edge count here —
-    through two hash probes). Requires the per-vertex neighbor-list
-    map (O(m) total cells, same order as the oriented edge list) to
-    fit in executor memory; ``False`` falls back to shuffled wedge
-    joins, where intersection would be strictly worse (see the
-    in-code note).
+    ``broadcast_edges=True`` closes wedges by ADJACENCY INTERSECTION:
+    one broadcast of the per-vertex oriented neighbor lists and one
+    `array_intersect` per edge — O(d_u + d_w) ≤ O(√m) work per edge,
+    and no wedge stream is materialized. Requires the neighbor-list map
+    (O(m) total cells) to fit in executor memory. ``False`` falls back
+    to shuffled wedge joins.
 
-    ``None`` (the default) AUTO-selects at the measured crossover:
-    broadcast while the oriented list holds ≤ *broadcast_max_edges*
-    rows, shuffled beyond. The r8 100× scale smoke is the calibration:
-    12M edges (10× tile) broadcast fine on an 8 GiB heap (α = 0.97),
-    119.6M edges (100× tile) OOM'd it — ~100 B/edge of hashmap × two
-    probes is ~12 GiB per executor, too much at ANY executor size worth
-    provisioning. The count is one cheap job over the already-
-    checkpointed oriented leaf.
-
-    *hybrid_core_max_cells* > 0 switches the fallback to a SKEW-SPLIT
-    HYBRID (r13, guide §2.4/§2.5): the wedge volume through a middle
-    vertex v is indeg(v)·outdeg(v) while broadcasting v's adjacency
-    costs outdeg(v) map cells — coverage per cell is exactly
-    indeg(v) — so the adjacency of the highest-indeg CORE that fits
-    the given cell budget is broadcast and those edges close by a
-    pinned array_intersect pass, while only the middles OUTSIDE the
-    core go through the shuffled wedge joins. Each triangle u→w, u→x,
-    w→x is still found exactly once, at its detection edge (u, w): the
-    intersection side handles it iff w is in the core, the wedge join
-    (middle = w) otherwise. Core selection is all-or-nothing per indeg
-    VALUE over the degree histogram (≤ O(√m) distinct values — a
-    driver-side prefix scan of the same class as the crossover count),
-    deterministic and under budget by construction.
-
-    The hybrid is OFF by default (``None`` → 0, pure r11 wedge joins)
-    on measurement: with a 20M-cell core (41.5% wedge coverage) it won
-    the 10× forced-fallback tile by 21% (33.4 vs 42.3 s) but measured
-    ~5% SLOWER at the 100× tile (731.4 vs 698.1 s, single runs) where
-    one box's disk bandwidth bounds both the wedge shuffle it saves
-    and the adjacency build + intersect pass it adds — BASELINE.md
-    "Round-13: triangle skew-split hybrid". On a cluster whose wedge
-    shuffle crosses NICs the trade should tip the other way; callers
-    there opt in with a budget sized like *broadcast_max_edges*.
+    ``None`` (the default) broadcasts while the oriented list holds
+    ≤ *broadcast_max_edges* rows and falls back beyond — the crossover
+    between a 10× tile that broadcast fine on an 8 GiB heap and a 100×
+    tile that OOM'd it (BASELINE.md "`triangle_counts` design record").
 
     Returns (vertex, n_triangles) — k rows.
     """
@@ -243,36 +207,20 @@ def triangle_counts(
     if broadcast_edges is None:
         broadcast_edges = oriented.count() <= broadcast_max_edges
     if broadcast_edges:
-        # adjacency-intersection wedge closure (r12): build the oriented
+        # adjacency-intersection wedge closure: build the oriented
         # out-neighbor list per vertex (one narrow shuffle), recover each
-        # edge (u, w) WITH u's list attached by re-exploding the list —
-        # no join needed on the u side — broadcast-attach w's list, and
-        # close wedges with one `array_intersect` per edge instead of
-        # materializing the O(Σ outdeg²) wedge stream through two hash
-        # probes. Work per edge is O(d_u + d_w) ≤ O(√m) by the
-        # orientation bound — the same O(m^1.5) worst case as the wedge
-        # join with a much smaller constant (measured 6.4 s → 3.2 s on
-        # the sf0.1 co-purchase graph, rows identical). A triangle
-        # u→w, u→x, w→x is found exactly once, at edge (u, w): x is a
-        # common OUT-neighbor only there (w→x kills the other two
-        # candidacies). Per-vertex counts: u and w each participate in
-        # |intersection| triangles of this edge, every x in once; the
-        # three contribution branches re-run the cheap intersect rather
-        # than pinning an array-typed intermediate (measured faster than
-        # a one-pass struct-array explode, 3.2 s vs 6.9 s — per-row
-        # struct allocation dominates that shape).
+        # edge (u, w) WITH u's list attached by re-exploding the list,
+        # broadcast-attach w's list, and intersect. A triangle u→w, u→x,
+        # w→x is found exactly once, at edge (u, w): x is a common
+        # OUT-neighbor only there (w→x kills the other two candidacies).
+        # u and w each participate in |intersection| triangles of this
+        # edge, every x in once.
         # Broadcast memory: ONE map of n neighbor lists, O(m) total
-        # cells — same order as each of the two edge-list maps the wedge
-        # join broadcast, so the existing edge-count crossover applies
-        # unchanged.
-        # pinned (r13): adj is referenced twice — exploded as the probe
-        # side and broadcast — and exchange reuse only covers the
-        # shuffle, not the post-exchange collect_list aggregate, so the
-        # aggregate built TWICE per query (r12 ADVICE). One O(m)-cell
-        # serialized pin builds it once: interleaved A/B measured the
-        # wedge phase 3.27 → 2.94 s at sf0.1. Broadcast-branch-only
-        # state, bounded by the ≤20M-edge crossover like the broadcast
-        # map itself.
+        # cells — same order as the oriented edge list, so the
+        # edge-count crossover bounds it.
+        # adj is pinned: it is referenced twice (exploded probe side and
+        # broadcast), and exchange reuse does not cover the
+        # post-exchange collect_list aggregate.
         adj = oriented.groupBy("u").agg(
             F.collect_list("w").alias("_nbrs")
         ).localCheckpoint(eager=True, storageLevel=_EDGE_PIN)
@@ -292,97 +240,14 @@ def triangle_counts(
         return _vertex_topk(_intersection_contribs(tri_e), k)
     # shuffled fallback (beyond the broadcast crossover): wedge joins
     # with HASH-hinted build sides. A sort-merge plan would SORT the
-    # wedge stream — O(m^1.5) rows, ~4B at the 100x tile — before the
-    # second join, and the aggregate after it needs no order; hash
-    # probing keeps the stream a stream. The build sides stay
-    # O(m/partitions) (~8 MB/partition at 119.6M edges / 256
-    # partitions), and the orientation bound caps any one key's wedge
-    # fan-out at O(sqrt(m)), so per-partition hash tables stay flat.
-    # Measured round 11: the SMJ fallback's wedge sort spilled >79 GiB
-    # at the 100x tile (disk-full abort); the hash plan's only big
-    # disk cost is the wedge shuffle write itself. (A fully SHUFFLED
-    # adjacency-intersection would move O(Σ outdeg²) array bytes — the
-    # wedge volume — through the exchange, strictly worse than
-    # shuffling the wedge rows themselves; hence the r13 hybrid below
-    # broadcasts only the core adjacency it can afford and wedge-joins
-    # the rest.)
-    budget = 0 if hybrid_core_max_cells is None else hybrid_core_max_cells
-    tau = None
-    if budget > 0:
-        # degree histogram: ≤ O(√m) rows — a driver-side prefix scan of
-        # the same class as the crossover count above
-        outd = oriented.groupBy("u").agg(F.count("*").alias("_od"))
-        ind = oriented.groupBy("w").agg(F.count("*").alias("_id"))
-        vstats = ind.join(outd, ind["w"] == outd["u"]).select(
-            ind["w"].alias("_cv"), "_id", "_od"
-        )
-        cells = 0
-        for r in (
-            vstats.groupBy("_id")
-            .agg(F.sum("_od").alias("_cells"))
-            .orderBy(F.desc("_id"))
-            .collect()
-        ):
-            if cells + r["_cells"] > budget:
-                break
-            cells += r["_cells"]
-            tau = r["_id"]
-    if tau is not None:
-        # skew-split hybrid: adjacency intersection for edges whose
-        # detection endpoint w sits in the high-indeg core, wedge joins
-        # (with both join sides pre-filtered to non-core middles) for
-        # the rest. The core set and the full adjacency are pinned —
-        # each is referenced twice and exchange reuse does not cover
-        # the post-exchange aggregates.
-        core = (
-            vstats.filter(F.col("_id") >= tau)
-            .select("_cv")
-            .localCheckpoint(eager=True)
-        )
-        adj = (
-            oriented.groupBy("u")
-            .agg(F.collect_list("w").alias("_nbrs"))
-            .localCheckpoint(eager=True, storageLevel=_EDGE_PIN)
-        )
-        adj_core = adj.join(
-            F.broadcast(core), adj["u"] == core["_cv"]
-        ).select(F.col("u").alias("w"), F.col("_nbrs").alias("_nw"))
-        e2 = adj.select(
-            "u", F.explode("_nbrs").alias("w"), F.col("_nbrs").alias("_nu")
-        ).join(F.broadcast(adj_core), "w")
-        # PINNED, unlike the broadcast branch's re-intersect: here the
-        # covered intersect work is the covered wedge volume (1.69B
-        # element scans at the 100x tile) — re-running it per
-        # contribution branch tripled it and measured SLOWER than the
-        # pure wedge join (833.9 s vs 698.1 s, first r13 100x cut);
-        # the pin holds only the closed edges and their (small)
-        # intersection arrays.
-        tri_e = e2.select(
-            "u", "w", F.array_intersect("_nu", "_nw").alias("_x")
-        ).filter(F.size("_x") > 0).localCheckpoint(
-            eager=True, storageLevel=_EDGE_PIN
-        )
-        o1 = oriented.join(
-            F.broadcast(core), oriented["w"] == core["_cv"], "left_anti"
-        ).select(F.col("u").alias("a"), F.col("w").alias("b"))
-        o2 = (
-            oriented.join(
-                F.broadcast(core), oriented["u"] == core["_cv"], "left_anti"
-            )
-            .select(F.col("u").alias("b"), F.col("w").alias("c"))
-            .hint("SHUFFLE_HASH")
-        )
-        o3 = oriented.select(
-            F.col("u").alias("a"), F.col("w").alias("c")
-        ).hint("SHUFFLE_HASH")
-        tri = o1.join(o2, "b").join(o3, ["a", "c"])
-        contribs = _intersection_contribs(tri_e).unionAll(
-            tri.select(F.explode(F.array("a", "b", "c")).alias("vertex"))
-            .select("vertex", F.lit(1).cast("long").alias("c"))
-        )
-        return _vertex_topk(contribs, k)
-    # pure wedge joins (empty core: budget 0, or the single top indeg
-    # value alone overflows it) — the r11 shape, unchanged
+    # O(m^1.5)-row wedge stream before the second join (it spilled past
+    # the disk at the 100x tile, BASELINE.md "`triangle_counts` design
+    # record"), and the aggregate after it needs no order. The build sides
+    # stay O(m/partitions), and the orientation bound caps any one key's
+    # wedge fan-out at O(sqrt(m)), so per-partition hash tables stay
+    # flat. A SHUFFLED adjacency intersection would move the O(Σ
+    # outdeg²) wedge volume as array bytes through the exchange —
+    # strictly worse than shuffling the wedge rows themselves.
     o1 = oriented.select(F.col("u").alias("a"), F.col("w").alias("b"))
     o2 = oriented.select(F.col("u").alias("b"), F.col("w").alias("c")).hint(
         "SHUFFLE_HASH"
@@ -403,9 +268,9 @@ def _intersection_contribs(tri_e: DataFrame) -> DataFrame:
     intersection closure: for each base edge (u, w) with common
     out-neighbor set _x, u and w each participate in |_x| triangles
     and every x in _x in one. The three branches re-run the cheap
-    intersect rather than pinning an array-typed intermediate
-    (measured faster in r12 — per-row struct allocation dominates the
-    one-pass shape)."""
+    intersect rather than pinning an array-typed intermediate: per-row
+    struct allocation makes a one-pass explode slower (BASELINE.md
+    "`triangle_counts` design record")."""
     csize = F.size("_x").cast("long")
     return (
         tri_e.select(F.col("u").alias("vertex"), csize.alias("c"))

@@ -159,8 +159,7 @@ def rotate_unchecked_first(
     keys: list[str],
     hoist: tuple[str, ...] = ("ext_approx", "flagship"),
 ) -> list[str]:
-    """Order *keys* so never-driver-verified ones come first, then
-    keys whose implementation changed since their last green round.
+    """Order *keys* so never-driver-verified ones come first.
 
     The driver's per-round CORRECTNESS check caps at the first 50
     registry keys, so the order IS the verification schedule. Buckets,
@@ -170,55 +169,18 @@ def rotate_unchecked_first(
     2. never-green keys — no green row in any committed
        CORRECTNESS_r*.json (see `driver_green_keys`); a key promoted
        from rows-only to a full oracle re-enters here;
-    3. green keys whose chased source *segments* differ from the
-       committed verification manifest (directly edited since their
-       last driver check — the `ext_rfm` round-6 hole this closes);
-    4. green keys with stale/missing file-level deps in the manifest
-       (conservative invalidation);
-    5. stable green keys, in canonical module order (still guarded
-       every round by tests/test_oracle_parity.py).
-
-    Buckets 3–4 come from `manifest.classify_changed`, which compares
-    static per-key fingerprints of the worktree against
-    ``verification_manifest.json`` (refreshed each round from the
-    driver-verified commit). A missing manifest degrades to the pure
-    never-verified rotation.
+    3. green keys, in canonical module order (every key is still checked
+       on every run by tests/test_oracle_parity.py).
     """
     oracle_keys = {
         name for name, qd in all_queries().items() if qd.oracle is not None
     }
     oracle_keys.add("flagship")
     green = driver_green_keys(oracle_keys)
-    try:
-        # import inside the guard: a broken manifest module must degrade
-        # to the pure never-verified rotation, not fail the driver import
-        from etl_acordos_spark.queries.manifest import classify_changed
-
-        seg_changed, dep_changed = classify_changed(keys)
-    except Exception as exc:  # never let rotation break the driver's import
-        # ... but never silently either: an invisible fingerprint-chaser
-        # bug would regress rotation to shipping changed keys unverified
-        import warnings
-
-        warnings.warn(
-            f"rotate_unchecked_first: classify_changed failed ({exc!r}); "
-            "falling back to the pure never-verified rotation",
-            stacklevel=2,
-        )
-        seg_changed, dep_changed = set(), set()
     front = [k for k in hoist if k in keys and k not in green]
     unchecked = [k for k in keys if k not in green and k not in front]
-    edited = [
-        k for k in keys if k in green and k in seg_changed and k not in front
-    ]
-    stale = [
-        k
-        for k in keys
-        if k in green and k in dep_changed and k not in seg_changed and k not in front
-    ]
-    moved = set(front) | set(edited) | set(stale)
-    checked = [k for k in keys if k in green and k not in moved]
-    return front + unchecked + edited + stale + checked
+    checked = [k for k in keys if k in green]
+    return front + unchecked + checked
 
 
 def all_queries() -> dict[str, QueryDef]:

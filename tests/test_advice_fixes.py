@@ -230,54 +230,6 @@ def test_ks_oracle_null_parity_on_empty_cohort(spark):
 # ------------------------------------------- round-8 ADVICE regressions
 
 
-def test_manifest_refresh_warns_on_uncommitted_correctness(tmp_path):
-    """refresh() must not silently no-op when the latest CORRECTNESS
-    file has no committing commit (running refresh too early)."""
-    import json
-    import subprocess
-    import warnings
-
-    from etl_acordos_spark.queries import manifest as mani
-
-    root = tmp_path / "repo"
-    root.mkdir()
-    subprocess.run(["git", "init", "-q", str(root)], check=True)
-    (root / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"k": {"hash_match": True}})
-    )
-    orig_root = mani.repo_root
-    mani.repo_root = lambda: str(root)
-    try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            mani.refresh()
-        assert any(
-            "no committing commit" in str(w.message) for w in caught
-        ), "expected a loud warning for the uncommitted CORRECTNESS file"
-    finally:
-        mani.repo_root = orig_root
-
-
-def test_rotation_warns_when_classify_changed_breaks(monkeypatch):
-    """A broken fingerprint chaser must degrade LOUDLY, not silently."""
-    import warnings
-
-    from etl_acordos_spark.queries import base as qbase
-    from etl_acordos_spark.queries import manifest as mani
-
-    def _boom(keys):
-        raise RuntimeError("chaser exploded")
-
-    monkeypatch.setattr(mani, "classify_changed", _boom)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        order = qbase.rotate_unchecked_first(["flagship"])
-    assert order, "rotation must still return an ordering"
-    assert any(
-        "classify_changed failed" in str(w.message) for w in caught
-    ), "expected a loud warning when the chaser breaks"
-
-
 def test_scale_tile_copy0_embeddings_pass_through(spark, monkeypatch, tmp_path):
     """Tiling convention: copy 0 of EVERY varied column is the source
     verbatim — embeddings included (the jitter applies to copies >= 1)."""

@@ -78,6 +78,17 @@ def test_err_only_and_zero_row_rows_never_green(tmp_path, monkeypatch) -> None:
     assert green == {"rows_key", "full_key"}
 
 
+def test_rotation_bucket_order(monkeypatch) -> None:
+    """Pin the bucket order on synthetic keys (every real key is green,
+    so the window tests above hold vacuously): unchecked hoisted keys,
+    then never-green keys, then green keys — each in input order."""
+    import etl_acordos_spark.queries.base as base
+
+    monkeypatch.setattr(base, "driver_green_keys", lambda *_: {"a", "c"})
+    order = base.rotate_unchecked_first(["a", "b", "c", "d"], hoist=("d",))
+    assert order == ["d", "b", "a", "c"]
+
+
 def test_oracle_promotion_reenters_window(tmp_path, monkeypatch) -> None:
     """A key whose check was upgraded from rows-only to a full SQL
     oracle must count as unchecked again: its historical no_oracle row

@@ -142,16 +142,12 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         t_total = time.perf_counter() - t0
         # the demotion contract (tests/test_plan_health.py, BASELINE
-        # r11, amended r13): ShuffledHashJoin wedge probes, no
-        # SortMergeJoin (its wedge sort is the 79 GiB disk overrun).
-        # BroadcastHashJoin nodes MAY appear in the demoted plan when
-        # the r13 skew-split hybrid is enabled (hybrid_core_max_cells
-        # > 0: core-adjacency attach + anti-joins, budget-capped by
-        # construction) — so broadcast presence is reported, not
-        # asserted against.
+        # r11): ShuffledHashJoin wedge probes, no SortMergeJoin (its
+        # wedge sort is the 79 GiB disk overrun), no broadcast wedge join.
         demoted = (
             "ShuffledHashJoin" in plan
             and "SortMergeJoin" not in plan
+            and "BroadcastHashJoin" not in plan
         )
         results["triangle_auto"] = {
             "t_100x": round(t_total, 3),
