@@ -919,6 +919,12 @@ def _pq_topk_quantized(
     )
 
 
+#: fixed-point scale of `ivfpq_topk`'s integer grid (step 2^-20, ~5
+#: orders below the embeddings' cosine gaps); `ext_simsearch_ivfpq`'s
+#: DuckDB oracle replays the same grid
+IVFPQ_Q = 1 << 20
+
+
 def ivfpq_topk(
     df: DataFrame,
     query_id: int,
@@ -932,23 +938,32 @@ def ivfpq_topk(
     train_n: int = 256,
     refine: int = 8,
     n_iter: int = 5,
-    quantize: int | None = None,
 ) -> DataFrame:
     """IVF-PQ composite ANN — the standard billion-scale vector-index
     layout (Jégou et al., "Product Quantization for Nearest Neighbor
     Search", TPAMI 2011; Faiss ``IndexIVFPQ``): the coarse quantizer
     prunes the scan to ``n_probe/n_lists`` of the corpus, product-
-    quantized RESIDUALS (normalized vector − its cell centroid)
-    compress what remains ~16×, ADC scores codes without ever
-    decompressing, and exact cosine re-ranks only the ``k·refine``
-    shortlist.
+    quantized RESIDUALS (vector − its cell centroid) compress what
+    remains ~16×, ADC scores codes without ever decompressing, and
+    exact cosine re-ranks only the ``k·refine`` shortlist.
 
     Residual encoding is what makes the composite beat raw PQ: within
     a cell the residuals span a much smaller ball than the raw
     vectors, so the same ``m × ks`` codebook budget quantizes finer.
-    The decomposition is exact — with unit centroids ``c`` and
-    normalized vectors ``vn``, ``qn·vn = qn·c[cell] + qn·(vn −
-    c[cell])`` — so ADC error comes only from quantizing the residual.
+    ADC ranks candidates by ``||(q−c) − r̂||²`` (the query's residual
+    to the candidate's cell against its quantized residual), so ADC
+    error comes only from quantizing the residual.
+
+    All geometry lives on an exact integer grid (the `unit_clamped` +
+    quantize seam, scale `IVFPQ_Q`): coarse cells via integer Lloyd
+    over the id-prefix sample, residuals shifted +2Q into the positive
+    domain (Lloyd means divide — negative operands would split flooring
+    vs truncating engines), residual codebooks via
+    `_pq_train_codebooks_int`, and a per-probed-cell integer
+    squared-L2 LUT. The whole query therefore hash-verifies against
+    `ext_simsearch_ivfpq`'s DuckDB oracle (cell argmin + ADC replayed
+    as integer CTEs); against the float twin it replaced, the grid
+    cost no recall (BASELINE.md "IVF-PQ single path").
 
     Scale shape (the point of the composite at 100 TB):
 
@@ -963,147 +978,15 @@ def ivfpq_topk(
     - the probe filters on ``cell`` BEFORE any scoring, so the ADC
       scan touches ~n_probe/n_lists of the rows (with a cell-
       partitioned store this is partition pruning, not a filter);
-    - per-cell query constants ``qn·c`` fold into the score as a tiny
-      CASE over the n_probe probed cells; the only shuffle is the
-      k·refine TakeOrdered.
+      the only shuffle is the k·refine TakeOrdered.
 
     ``refine`` defaults higher than `pq_topk`'s (8 vs 4): residual
     codebooks are trained on ``train_n`` rows SPLIT across cells, so
     per-cell quantization is coarser than raw PQ's and the exact
-    re-rank shortlist needs more slack; measured at sf0.01 this
-    reaches the IVF pruning ceiling (neighbors outside the probed
-    cells are unreachable by construction) while the shortlist stays
-    k·refine rows — driver-trivial at any corpus size.
+    re-rank shortlist needs more slack.
 
-    Approximate by design, but the registry key runs the quantized
-    exact-integer variant and hash-verifies against a full DuckDB
-    oracle (cell argmin + ADC replayed as integer CTEs); recall is
-    unit-tested against `exact_topk` at floors at least as tight as
-    the IVF and PQ singles (tests/test_operators.py).
-
-    With *quantize* = Q the composite runs the exact shifted-integer
-    variant (`_ivfpq_topk_quantized`): quantized-normalized coarse
-    cells, shifted-positive integer residuals, integer residual
-    codebooks and per-probed-cell integer L2-ADC — ascending
-    ``||(q−c) − r̂||²`` is the same decomposition the float path
-    expresses as ``qn·c + qn·r̂`` — so the whole query hash-verifies
-    against `ext_simsearch_ivfpq`'s DuckDB oracle. The float path
-    stays the production default."""
-    if quantize:
-        return _ivfpq_topk_quantized(
-            df, query_id, id_col, vec_col, k, n_lists, n_probe,
-            m, ks, train_n, refine, n_iter, quantize,
-        )
-    rows = (
-        df.select(as_double(vec_col))
-        .orderBy(id_col)
-        .limit(max(train_n, 4 * n_lists))
-        .collect()
-    )
-    S = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
-    C = train_coarse_centroids(df, id_col, vec_col, n_lists, sample=S)
-    Cn = C / _safe_norms(C)
-    Sn = S[:train_n] / _safe_norms(S[:train_n])
-    books = _pq_train_codebooks(
-        Sn - Cn[np.argmax(Sn @ Cn.T, axis=1)], m, ks, n_iter
-    )
-    dim = S.shape[1]
-    dsub = dim // m
-
-    @F.pandas_udf("struct<cell:int,codes:array<int>>")
-    def encode(vecs: pd.Series) -> pd.DataFrame:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        mat = mat / _safe_norms(mat)
-        cells = np.argmax(mat @ Cn.T, axis=1)
-        res = mat - Cn[cells]
-        codes = np.empty((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            X = res[:, j * dsub : (j + 1) * dsub]
-            d2 = ((X[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = np.argmin(d2, axis=1)
-        return pd.DataFrame(
-            {"cell": cells.astype(np.int32), "codes": list(codes)}
-        )
-
-    qrow = (
-        df.filter(F.col(id_col) == query_id).select(as_double(vec_col)).head()
-    )
-    if qrow is None:
-        raise ValueError(
-            f"ivfpq_topk: query id {query_id!r} not found in {id_col!r}"
-        )
-    q = np.asarray(qrow[0], dtype=np.float64)
-    q_norm = float(np.linalg.norm(q))
-    if q_norm == 0.0:
-        raise ValueError(
-            f"ivfpq_topk: query vector {query_id!r} has zero norm — "
-            "cosine undefined"
-        )
-    qn = q / q_norm
-    probe = probe_cells(C, qn, n_probe)
-    # shared residual LUT (codebooks are cell-independent) + per-probed-
-    # cell constant qn·c — together the exact ADC decomposition above
-    lut = np.stack(
-        [books[j] @ qn[j * dsub : (j + 1) * dsub] for j in range(m)]
-    )
-    cell_const = {c: float(qn @ Cn[c]) for c in probe}
-
-    @F.pandas_udf("double")
-    def adc_residual(codes: pd.Series) -> pd.Series:
-        Cm = np.stack(codes.to_numpy())
-        return pd.Series(lut[np.arange(m), Cm].sum(axis=1))
-
-    const_expr = F.lit(0.0)
-    for c, v in cell_const.items():
-        const_expr = F.when(F.col("cell") == c, F.lit(v)).otherwise(
-            const_expr
-        )
-
-    encoded = df.select(
-        F.col(id_col).alias("id"),
-        as_double(vec_col).alias("v"),
-        encode(as_double(vec_col)).alias("e"),
-    ).select("id", "v", F.col("e.cell").alias("cell"), F.col("e.codes").alias("codes"))
-    shortlist = (
-        encoded.filter(F.col("cell").isin(probe))
-        .filter(F.col("id") != query_id)
-        .withColumn("approx_ip", const_expr + adc_residual(F.col("codes")))
-        .orderBy(F.col("approx_ip").desc(), F.col("id").asc())
-        .limit(k * refine)
-    )
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
-    return (
-        shortlist.withColumn("q", qcol)
-        .withColumn("cosine", F.round(cosine("v", "q"), 6))
-        .orderBy(F.col("cosine").desc(), F.col("id").asc())
-        .limit(k)
-        .select(F.col("id").alias("vec_id"), "cosine")
-    )
-
-
-def _ivfpq_topk_quantized(
-    df: DataFrame,
-    query_id: int,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_lists: int,
-    n_probe: int,
-    m: int,
-    ks: int,
-    train_n: int,
-    refine: int,
-    n_iter: int,
-    q_scale: int,
-) -> DataFrame:
-    """The exact shifted-integer IVF-PQ twin (see `ivfpq_topk`). All
-    geometry lives on the quantized-NORMALIZED grid (the `unit_clamped`
-    + quantize seam): coarse cells via integer Lloyd over the id-prefix
-    sample, residuals shifted +2Q into the positive domain (Lloyd means
-    divide — negative operands would split flooring vs truncating
-    engines), residual codebooks via `_pq_train_codebooks_int`, and a
-    per-probed-cell integer squared-L2 LUT. Replayed CTE-for-CTE by
-    `ext_simsearch_ivfpq`'s oracle."""
+    Recall is unit-tested against `exact_topk` at floors at least as
+    tight as the IVF and PQ singles (tests/test_operators.py)."""
     base = df.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v"))
     qrow = base.filter(F.col("id") == query_id).select("v").head()
     if qrow is None:
@@ -1129,16 +1012,16 @@ def _ivfpq_topk_quantized(
     # already clamped) sample — pass it through so the quantize branch
     # sees the same grid the corpus UDF will
     C = train_coarse_centroids(
-        df, id_col, vec_col, n_lists, sample=U, quantize=q_scale
+        df, id_col, vec_col, n_lists, sample=U, quantize=IVFPQ_Q
     )
-    Uq = quantize_mat(U[:train_n], q_scale)
-    shift = np.int64(2 * q_scale)
+    Uq = quantize_mat(U[:train_n], IVFPQ_Q)
+    shift = np.int64(2 * IVFPQ_Q)
     tcells = np.argmin(_int_rel_sq_dists(Uq, C), axis=1)
     books = _pq_train_codebooks_int(Uq - C[tcells] + shift, m, ks, n_iter)
     dim = Uq.shape[1]
     dsub = dim // m
 
-    qq = quantize_mat(unit_clamped_np(qv[None, :]), q_scale)[0]
+    qq = quantize_mat(unit_clamped_np(qv[None, :]), IVFPQ_Q)[0]
     probe = probe_cells_quantized(C, qq, n_probe)
     # per-probed-cell LUT: integer squared-L2 between the query's
     # cell-residual and each codeword — ascending sums rank candidates
@@ -1158,7 +1041,7 @@ def _ivfpq_topk_quantized(
     @F.pandas_udf("struct<cell:int,codes:array<int>>")
     def encode_q(vecs: pd.Series) -> pd.DataFrame:
         mat = quantize_mat(
-            unit_clamped_np(np.stack(vecs.to_numpy())), q_scale
+            unit_clamped_np(np.stack(vecs.to_numpy())), IVFPQ_Q
         )
         cells = np.argmin(_int_rel_sq_dists(mat, C), axis=1)
         res = mat - C[cells] + shift

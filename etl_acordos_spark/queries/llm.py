@@ -35,6 +35,7 @@ from etl_acordos_spark.operators.cluster import (
     semantic_dedup_keep,
 )
 from etl_acordos_spark.operators.simsearch import (
+    IVFPQ_Q,
     ann_topk_lsh,
     cosine_pairs,
     exact_topk,
@@ -437,17 +438,14 @@ def q_ext_simsearch_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan to the 4 probed ones, residual product quantization (16×32)
     compresses the survivors, ADC scores codes, exact cosine re-ranks
     the 80-id shortlist — the standard billion-scale layout (Faiss
-    IndexIVFPQ). Runs the exact shifted-integer variant
-    (quantize=2^20): quantized-normalized coarse cells, +2Q-shifted
-    integer residuals, integer codebooks and per-probed-cell integer
-    L2-ADC — the whole composite hash-verifies against `_ivfpq_oracle`
-    (coarse `_lloyd_ctes` + prefixed `_pq_codebook_ctes` + verified
-    cosine re-rank). The float path stays the production default;
-    recall floors ≥ the IVF and PQ singles stay unit-tested against
-    exact_topk."""
-    return ivfpq_topk(
-        t(spark, sf_dir, "embeddings"), query_id=0, k=10, quantize=1 << 20
-    )
+    IndexIVFPQ). Its exact shifted-integer grid (Q=2^20:
+    quantized-normalized coarse cells, +2Q-shifted integer residuals,
+    integer codebooks and per-probed-cell integer L2-ADC) makes the
+    whole composite hash-verify against `_ivfpq_oracle` (coarse
+    `_lloyd_ctes` + prefixed `_pq_codebook_ctes` + verified cosine
+    re-rank); recall floors ≥ the IVF and PQ singles stay unit-tested
+    against exact_topk."""
+    return ivfpq_topk(t(spark, sf_dir, "embeddings"), query_id=0, k=10)
 
 
 # ---------------------------------------------------- clustering / semantic
@@ -786,12 +784,12 @@ def _ivfpq_oracle(
     train_n: int = 256,
     refine: int = 8,
     n_iter: int = 5,
-    q: int = 1 << 20,
+    q: int = IVFPQ_Q,
     query_id: int = 0,
     coarse_iter: int = 4,
 ) -> str:
     """Exact DuckDB replay of the quantized IVF-PQ composite
-    (operators/simsearch.py::ivfpq_topk with quantize=Q): the quantized
+    (operators/simsearch.py::ivfpq_topk, Q = IVFPQ_Q): the quantized
     -normalized grid feeds the coarse `_lloyd_ctes` chain (id-prefix
     sample, 4 rounds — train_coarse_centroids' default), `_assign_cte`
     places the corpus, residuals shift +2Q into the positive domain,

@@ -54,7 +54,11 @@ from etl_acordos_spark.operators.simsearch import (
     quantize_mat,
     train_coarse_centroids,
 )
-from etl_acordos_spark.streaming.batching import write_id_range_batches
+from etl_acordos_spark.streaming.batching import (
+    run_micro_batches,
+    stream_namespace,
+    write_id_range_batches,
+)
 
 
 def _load_centroids(
@@ -106,11 +110,7 @@ def _train_quantizer(
     train_n = train_factor * n_lists
     # ONE collect serves both the availability check and the k-means
     # training sample; orderBy(id) makes it exactly the id-prefix
-    # sample batch-mode ivf_topk trains on. The orderBy plans as a
-    # TakeOrdered over the batch's vector column — a full batch pass,
-    # not an early-stop probe — but it replaces what used to be TWO
-    # identical passes (id-count probe + train_coarse_centroids'
-    # own collect), so first-batch latency still improves net
+    # sample batch-mode ivf_topk trains on
     rows = (
         batch_df.select(as_double(vec_col))
         .orderBy(id_col)
@@ -171,22 +171,19 @@ def streaming_ann_index_run(
     cell-partitioned IVF store under a PID-scoped namespace; returns
     the run namespace path (probe with `ann_index_topk`).
 
-    ``resume=True`` restarts an interrupted run against its existing
-    source, store, and checkpoint: the engine redelivers every batch
-    whose foreachBatch ran without the commit landing; the dynamic
-    partition overwrite rewrites exactly the replayed batch's
-    (ingest_batch, cell) partitions and the staged-rename quantizer
-    freeze is skipped once `centroids_dir` exists — the crash-recovery
-    path the fault-injection tests drive. ``on_batch_complete(
-    batch_id)`` runs after the batch's cell write, before the engine
-    commit (telemetry / injected-crash point).
+    ``resume`` / ``on_batch_complete``: the crash-recovery restart and
+    batch-completion hook of `batching.run_micro_batches`. On a replay
+    the dynamic partition overwrite rewrites exactly the batch's
+    (ingest_batch, cell) partitions, and the staged-rename quantizer
+    freeze is skipped once `centroids_dir` exists; the hook runs after
+    the batch's cell write.
 
     Raises ``ValueError`` eagerly when *vectors* cannot train the
     quantizer at all (fewer rows than the 4×n_lists training sample,
     including zero) — otherwise the same error would surface mid-run
-    wrapped in an opaque ``StreamingQueryException`` from foreachBatch
-    (r10 VERDICT degenerate-input sweep). The count is one columnar
-    metadata pass over a source the very next step rewrites in full.
+    wrapped in an opaque ``StreamingQueryException`` from foreachBatch.
+    The count is one columnar metadata pass over a source the very next
+    step rewrites in full.
     """
     n_total = vectors.count()
     train_n = 4 * n_lists  # _train_quantizer's train_factor default
@@ -196,97 +193,58 @@ def streaming_ann_index_run(
             f"sample {train_n} (4 × n_lists={n_lists}); lower n_lists "
             "or supply more vectors"
         )
-    run_ns = os.path.join(base_dir, f"stream_ann_index_{os.getpid()}")
-    src = os.path.join(run_ns, "src")
+    run_ns = stream_namespace(base_dir, "ann_index")
     cells_dir = os.path.join(run_ns, "cells")
     centroids_dir = os.path.join(run_ns, "centroids")
-    ckpt = os.path.join(run_ns, "ckpt")
-    if resume:
-        if not os.path.isdir(src):
-            raise ValueError(
-                "streaming_ann_index_run: resume=True but no prior "
-                f"run at {run_ns}"
-            )
-    else:
-        shutil.rmtree(run_ns, ignore_errors=True)
-        os.makedirs(run_ns, exist_ok=True)
+    # the quantizer is immutable once frozen, so later batches reuse
+    # the driver-side copy instead of re-reading + collecting it
+    quantizer: dict[str, np.ndarray] = {}
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_overwrite = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode"
-    )
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(4, spark.sparkContext.defaultParallelism)),
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not os.path.exists(centroids_dir):
+            if not _train_quantizer(
+                spark, batch_df, id_col, vec_col, n_lists,
+                centroids_dir, quantize=quantize,
+            ):
+                return  # empty batch cannot train — wait for data
+        if "C" not in quantizer:
+            C_loaded, q_stored = _load_centroids(spark, centroids_dir)
+            if q_stored != int(quantize or 0):
+                raise ValueError(
+                    "streaming_ann_index_run: store at "
+                    f"{centroids_dir} was trained with q_scale="
+                    f"{q_stored}, run asked for {quantize!r}"
+                )
+            quantizer["C"] = C_loaded
+        C = quantizer["C"]
+        assign = (
+            assign_cell_quantized_udf(C, quantize)
+            if quantize
+            else assign_cell_udf(C)
         )
+        (
+            batch_df.select(
+                F.col(id_col),
+                as_double(vec_col).alias(vec_col),
+                assign(as_double(vec_col)).alias("cell"),
+            )
+            .withColumn("ingest_batch", F.lit(batch_id))
+            .write.mode("overwrite")
+            .partitionBy("ingest_batch", "cell")
+            .parquet(cells_dir)
+        )
+
+    run_micro_batches(
+        spark, run_ns,
+        lambda src: write_id_range_batches(
+            vectors, id_col, [id_col, vec_col], run_ns, src, n_batches
+        ),
+        process_batch, caller="streaming_ann_index_run",
+        resume=resume, on_batch_complete=on_batch_complete,
         # dynamic mode scopes mode("overwrite") to the partitions a
         # write actually touches — the idempotent-replay contract
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-        if not resume:
-            write_id_range_batches(
-                vectors, id_col, [id_col, vec_col], run_ns, src, n_batches
-            )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        # the quantizer is immutable once frozen, so later batches reuse
-        # the driver-side copy instead of re-reading + collecting it
-        quantizer: dict[str, np.ndarray] = {}
-
-        def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if not os.path.exists(centroids_dir):
-                if not _train_quantizer(
-                    spark, batch_df, id_col, vec_col, n_lists,
-                    centroids_dir, quantize=quantize,
-                ):
-                    return  # empty batch cannot train — wait for data
-            if "C" not in quantizer:
-                C_loaded, q_stored = _load_centroids(spark, centroids_dir)
-                if q_stored != int(quantize or 0):
-                    raise ValueError(
-                        "streaming_ann_index_run: store at "
-                        f"{centroids_dir} was trained with q_scale="
-                        f"{q_stored}, run asked for {quantize!r}"
-                    )
-                quantizer["C"] = C_loaded
-            C = quantizer["C"]
-            assign = (
-                assign_cell_quantized_udf(C, quantize)
-                if quantize
-                else assign_cell_udf(C)
-            )
-            (
-                batch_df.select(
-                    F.col(id_col),
-                    as_double(vec_col).alias(vec_col),
-                    assign(as_double(vec_col)).alias("cell"),
-                )
-                .withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("ingest_batch", "cell")
-                .parquet(cells_dir)
-            )
-            if on_batch_complete is not None:
-                on_batch_complete(batch_id)
-
-        (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_overwrite
-        )
+        extra_conf={"spark.sql.sources.partitionOverwriteMode": "dynamic"},
+    )
     return run_ns
 
 

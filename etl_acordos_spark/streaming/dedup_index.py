@@ -56,7 +56,11 @@ from etl_acordos_spark.operators.dedup import (
     dedup_batch_against,
     minhash_bands,
 )
-from etl_acordos_spark.streaming.batching import write_id_range_batches
+from etl_acordos_spark.streaming.batching import (
+    run_micro_batches,
+    stream_namespace,
+    write_id_range_batches,
+)
 
 
 def _band_schema(
@@ -249,9 +253,8 @@ def streaming_dedup_index_run(
 ) -> DataFrame:
     """Run *docs* through the streaming dedup-index pipeline as
     *n_batches* ascending-id microbatches; returns the settled kept-doc
-    ids (lazy read over the kept store, which outlives this call —
-    PID-scoped working dirs, same rationale as
-    `events.incremental_upsert_run`). Ids must be non-null.
+    ids (lazy read over the kept store under the run's
+    `batching.stream_namespace`). Ids must be non-null.
 
     *probe_last_batches* — optional freshness horizon: probe only the
     newest N batches' index entries instead of the whole history (the
@@ -267,93 +270,55 @@ def streaming_dedup_index_run(
     Default None = dedup against all history (the fold-equivalence
     contract).
 
-    ``resume=True`` restarts an interrupted run against its existing
-    source, stores, and checkpoint: the engine redelivers every batch
-    whose foreachBatch ran without the commit landing, `_load_store`'s
-    ``< batch_id`` cut keeps the replay from probing its own prior
-    attempt, and the per-batch overwrite rewrites partial store state
-    — the crash-recovery path the fault-injection tests drive.
-    ``on_batch_complete(batch_id)`` runs after all three store writes,
-    before the engine commit (telemetry / injected-crash point)."""
+    ``resume`` / ``on_batch_complete``: the crash-recovery restart and
+    batch-completion hook of `batching.run_micro_batches`. On a replay
+    `_load_store`'s ``< batch_id`` cut keeps the batch from probing its
+    own prior attempt, and the per-batch overwrite rewrites partial
+    store state; the hook runs after all three store writes."""
     if probe_last_batches is not None and probe_last_batches < 1:
         # parts[-0:] would silently mean "all history", the opposite of
         # the caller's intent
         raise ValueError(
             "streaming_dedup_index_run: probe_last_batches must be >= 1"
         )
-    run_ns = os.path.join(base_dir, f"stream_dedup_index_{os.getpid()}")
-    src = os.path.join(run_ns, "src")
-    index_dir = os.path.join(run_ns, "band_index")
-    kept_dir = os.path.join(run_ns, "kept")
-    counts_dir = os.path.join(run_ns, "bucket_counts")
-    ckpt = os.path.join(run_ns, "ckpt")
-    if resume:
-        if not os.path.isdir(src):
-            raise ValueError(
-                "streaming_dedup_index_run: resume=True but no prior "
-                f"run at {run_ns}"
-            )
-    else:
-        shutil.rmtree(run_ns, ignore_errors=True)
-        os.makedirs(run_ns, exist_ok=True)
+    run_ns = stream_namespace(base_dir, "dedup_index")
 
-    # one-shot sizing, restored on exit (see events.run_stream_to_table)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(4, spark.sparkContext.defaultParallelism)),
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        _dedup_index_process_batch(
+            spark,
+            batch_df,
+            batch_id,
+            text_col=text_col,
+            id_col=id_col,
+            doc_schema=batch_df.schema,
+            kept_dir=os.path.join(run_ns, "kept"),
+            index_dir=os.path.join(run_ns, "band_index"),
+            counts_dir=os.path.join(run_ns, "bucket_counts"),
+            num_perm=num_perm,
+            bands=bands,
+            threshold=threshold,
+            shingle_n=shingle_n,
+            max_bucket_size=max_bucket_size,
+            probe_last_batches=probe_last_batches,
+            hash_fn=hash_fn,
         )
 
-        # deterministic delivery order: contiguous ascending id ranges,
-        # one file per range, one file per trigger — "keep-first" means
-        # lower-id batches win, and within a batch the lower id wins
-        # (dedup_batch_against's keep-first contract); a sampled
-        # repartitionByRange split would change which non-transitive
-        # near-dup comparisons happen between reruns (see batching.py)
-        if not resume:
-            write_id_range_batches(
-                docs, id_col, [id_col, text_col], run_ns, src, n_batches
-            )
-        doc_schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(doc_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-            _dedup_index_process_batch(
-                spark,
-                batch_df,
-                batch_id,
-                text_col=text_col,
-                id_col=id_col,
-                doc_schema=doc_schema,
-                kept_dir=kept_dir,
-                index_dir=index_dir,
-                counts_dir=counts_dir,
-                num_perm=num_perm,
-                bands=bands,
-                threshold=threshold,
-                shingle_n=shingle_n,
-                max_bucket_size=max_bucket_size,
-                probe_last_batches=probe_last_batches,
-                hash_fn=hash_fn,
-            )
-            if on_batch_complete is not None:
-                on_batch_complete(batch_id)
-
-        (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.read.parquet(os.path.join(kept_dir, "b*")).select(id_col)
+    # deterministic delivery order: contiguous ascending id ranges, one
+    # file per range — "keep-first" means lower-id batches win, and
+    # within a batch the lower id wins (dedup_batch_against's keep-first
+    # contract); a sampled repartitionByRange split would change which
+    # non-transitive near-dup comparisons happen between reruns
+    run_micro_batches(
+        spark, run_ns,
+        lambda src: write_id_range_batches(
+            docs, id_col, [id_col, text_col], run_ns, src, n_batches
+        ),
+        process_batch, caller="streaming_dedup_index_run",
+        resume=resume, on_batch_complete=on_batch_complete,
+    )
+    return spark.read.parquet(os.path.join(run_ns, "kept", "b*")).select(
+        id_col
+    )
 
 
 def _finish_pending_compaction(counts_dir: str) -> None:

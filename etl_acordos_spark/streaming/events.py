@@ -23,11 +23,14 @@ Design notes for a real deployment:
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pandas as pd
 from collections.abc import Iterator
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -37,6 +40,13 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from etl_acordos_spark.streaming.batching import (
+    narrowed_shuffle,
+    run_micro_batches,
+    stream_namespace,
+)
+from etl_acordos_spark.streaming.dedup_index import _store_batch
 
 #: file-stream schema when events.parquet carries TIMESTAMP(NANOS): with
 #: spark.sql.legacy.parquet.nanosAsLong the raw int64 nanos surface as
@@ -264,31 +274,15 @@ def run_stream_to_table(
     input → deterministic result equal to the batch aggregate.
     """
     spark = stream_df.sparkSession
-    # State-store parallelism = shuffle partitions, fixed at the query's
-    # first start (it's baked into the checkpoint). Every state partition
-    # pays a per-microbatch commit (checkpoint file write), so for a
-    # one-shot availableNow run the partition count is almost pure
-    # overhead: measured at sf0.1, 8 partitions halve the wall time of
-    # 32 and 4 shaves another ~20% (2 is flat vs 4 — state-store open
-    # cost dominates below that). A long-running production stream would
-    # instead size this once for its key cardinality / throughput and
-    # keep it for the checkpoint's lifetime.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(4, spark.sparkContext.defaultParallelism)),
-    )
-    try:
-        q = (
+    with narrowed_shuffle(spark):
+        (
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -315,82 +309,43 @@ def incremental_upsert_run(
     per-batch plan — reduce, co-partitioned merge join, partition-local
     rewrite — is exactly this one.
     """
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-
-    # PID-scoped working dirs: a structured-streaming checkpoint is
-    # fatally corrupted if another process rmtree's it mid-run (observed
-    # as "ckpt/commits does not exist" when two harnesses run this query
-    # concurrently against the same scratch root), so each process gets
-    # its own trio (fresh-started per run; the snapshot must outlive this
-    # call because the returned DataFrame reads it lazily).
-    run_ns = os.path.join(base_dir, f"stream_upsert_{os.getpid()}")
-    src = os.path.join(run_ns, "src")
+    run_ns = stream_namespace(base_dir, "upsert")
     lake = os.path.join(run_ns, "lake")
-    ckpt = os.path.join(run_ns, "ckpt")
-    shutil.rmtree(run_ns, ignore_errors=True)
 
-    # Same one-shot sizing rationale as run_stream_to_table: each batch's
-    # two latest-per-key windows and the snapshot rewrite inherit the
-    # session's shuffle partitions — at full width that's dozens of tiny
-    # tasks and part-files per microbatch for a snapshot of a few
-    # thousand keys. A production deployment sizes this to the key
-    # cardinality; restore on exit.
-    # The try/finally starts at the override itself: the seed write and
-    # stream construction below also run under the narrowed setting, and
-    # an exception anywhere in setup must not leak it into the session.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(4, spark.sparkContext.defaultParallelism)),
+    def latest_per_user(df: DataFrame) -> DataFrame:
+        w = Window.partitionBy("user_id").orderBy(
+            F.col("ts").desc(), F.col("event_id").desc()
+        )
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
         )
 
-        cols = ["event_id", "user_id", "ts", "value"]
-        events.select(*cols).repartition(n_batches).write.parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        latest_order = [F.col("ts").desc(), F.col("event_id").desc()]
-
-        def latest_per_user(df: DataFrame) -> DataFrame:
-            w = Window.partitionBy("user_id").orderBy(*latest_order)
-            return (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
+    def merge_batch(batch: DataFrame, batch_id: int) -> None:
+        upserts = latest_per_user(batch)
+        if os.path.exists(lake):
+            merged = latest_per_user(
+                spark.read.parquet(lake).unionByName(upserts)
             )
+        else:
+            merged = upserts
+        tmp = f"{lake}_v{batch_id}"
+        merged.write.mode("overwrite").parquet(tmp)
+        old = f"{lake}_old{batch_id}"
+        if os.path.exists(lake):
+            os.rename(lake, old)
+        os.rename(tmp, lake)
+        shutil.rmtree(old, ignore_errors=True)
 
-        def merge_batch(batch: DataFrame, batch_id: int) -> None:
-            upserts = latest_per_user(batch)
-            if os.path.exists(lake):
-                merged = latest_per_user(
-                    spark.read.parquet(lake).unionByName(upserts)
-                )
-            else:
-                merged = upserts
-            tmp = f"{lake}_v{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp)
-            old = f"{lake}_old{batch_id}"
-            if os.path.exists(lake):
-                os.rename(lake, old)
-            os.rename(tmp, lake)
-            shutil.rmtree(old, ignore_errors=True)
-
-        (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    cols = ["event_id", "user_id", "ts", "value"]
+    run_micro_batches(
+        spark, run_ns,
+        lambda src: (
+            events.select(*cols).repartition(n_batches).write.parquet(src)
+        ),
+        merge_batch, caller="incremental_upsert_run",
+    )
     return spark.read.parquet(lake)
 
 
@@ -406,12 +361,10 @@ def streaming_cms_run(
 ) -> DataFrame:
     """Streaming count-min sketch maintenance (foreachBatch): the value
     stream (one column ``v``), delivered as *n_batches* microbatches,
-    folds each batch's cell-count DELTA into a parquet cells store by
-    summing per (salt, bucket) with an idempotent per-batch overwrite
-    (``mode("overwrite")`` is delete-then-write, NOT an atomic rename —
-    a crash mid-write leaves a partial delta dir that the replayed
-    batch rewrites on restart) — the always-on frequency sketch a
-    streaming pipeline keeps next to its ingest.
+    lands each batch's cell-count DELTA in its own ``b{batch_id}``
+    subdirectory of a parquet cells store; the settled sketch is the
+    per-(salt, bucket) sum over all delta dirs — the always-on
+    frequency sketch a streaming pipeline keeps next to its ingest.
 
     CMS cells are ADDITIVE, so the settled store is bit-identical to a
     batch build over the full stream no matter how values were split
@@ -421,74 +374,34 @@ def streaming_cms_run(
     still input-size-independent — the whole point of sketching.
 
     Replay safety: foreachBatch is at-least-once, so summing a delta
-    into a rolling total would DOUBLE-COUNT a replayed batch. Instead
-    each batch's delta lands in its own ``b{batch_id}`` subdirectory
-    with an idempotent OVERWRITE (the dedup_index store convention —
-    a replayed batch rewrites its own prior attempt), and the settled
-    sketch is the per-(salt, bucket) sum over all delta dirs. A
+    into a rolling total would DOUBLE-COUNT a replayed batch; the
+    per-batch idempotent OVERWRITE (the dedup_index store convention)
+    makes a replay rewrite its own prior attempt, partial or not. A
     long-running stream compacts old delta dirs into one the same way
     ext_compaction folds small files — additivity makes that merge
     lossless at any time.
 
-    ``resume=True`` RESTARTS an interrupted run against its existing
-    source, store, and checkpoint instead of starting fresh: the
-    engine's checkpoint log redelivers every batch whose foreachBatch
-    ran without the commit landing, and the idempotent per-batch
-    overwrite absorbs the replay — the crash-recovery path the
-    fault-injection tests exercise. ``on_batch_complete(batch_id)`` is
-    an optional per-batch completion hook invoked AFTER the batch's
-    delta write and BEFORE the engine commits the batch (telemetry in
-    production; the injected-crash point in tests)."""
-    import os
-    import shutil
-
+    ``resume`` / ``on_batch_complete``: the crash-recovery restart and
+    batch-completion hook of `batching.run_micro_batches`; the hook
+    runs after the batch's delta write."""
     from etl_acordos_spark.operators.relational import cms_cells
 
-    run_ns = os.path.join(base_dir, f"stream_cms_{os.getpid()}")
-    src = os.path.join(run_ns, "src")
+    run_ns = stream_namespace(base_dir, "cms")
     store = os.path.join(run_ns, "cells")
-    ckpt = os.path.join(run_ns, "ckpt")
-    if resume:
-        if not os.path.isdir(src):
-            raise ValueError(
-                f"streaming_cms_run: resume=True but no prior run at {run_ns}"
-            )
-    else:
-        shutil.rmtree(run_ns, ignore_errors=True)
-        os.makedirs(store)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(4, spark.sparkContext.defaultParallelism)),
-        )
-        if not resume:
-            vals.select("v").repartition(n_batches).write.parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    def write_delta(batch: DataFrame, batch_id: int) -> None:
+        _store_batch(
+            cms_cells(batch.filter(F.col("v").isNotNull()), depth, width_hex),
+            store,
+            batch_id,
         )
 
-        def write_delta(batch: DataFrame, batch_id: int) -> None:
-            cms_cells(
-                batch.filter(F.col("v").isNotNull()), depth, width_hex
-            ).write.mode("overwrite").parquet(
-                os.path.join(store, f"b{batch_id:05d}")
-            )
-            if on_batch_complete is not None:
-                on_batch_complete(batch_id)
-
-        (
-            stream.writeStream.foreachBatch(write_delta)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    run_micro_batches(
+        spark, run_ns,
+        lambda src: vals.select("v").repartition(n_batches).write.parquet(src),
+        write_delta, caller="streaming_cms_run",
+        resume=resume, on_batch_complete=on_batch_complete,
+    )
     return (
         spark.read.parquet(os.path.join(store, "b*"))
         .groupBy("salt", "bucket")
@@ -520,66 +433,35 @@ def streaming_hll_run(
     property that makes `streaming_cms_run` fully hash-oracle-able
     (there by additivity, here by max-idempotence, which additionally
     makes even a DOUBLE-counted replay harmless; the per-batch delta
-    dirs are kept anyway so a partial crash-write never corrupts
-    earlier batches). State is O(n_batches · |groups| · 4096) rows,
-    input-size-independent. A long-running stream compacts old delta
-    dirs into one by the same max-merge — lossless at any time.
+    dirs keep a partial crash-write away from earlier batches). State
+    is O(n_batches · |groups| · 4096) rows, input-size-independent.
 
-    ``resume`` / ``on_batch_complete``: same crash-recovery restart
-    and batch-completion-hook contract as `streaming_cms_run`."""
-    import os
-    import shutil
-
+    ``resume`` / ``on_batch_complete``: as in `streaming_cms_run`."""
     from etl_acordos_spark.operators.relational import hll_md5_registers
 
-    run_ns = os.path.join(base_dir, f"stream_hll_{os.getpid()}")
-    src = os.path.join(run_ns, "src")
+    run_ns = stream_namespace(base_dir, "hll")
     store = os.path.join(run_ns, "regs")
-    ckpt = os.path.join(run_ns, "ckpt")
-    if resume:
-        if not os.path.isdir(src):
-            raise ValueError(
-                f"streaming_hll_run: resume=True but no prior run at {run_ns}"
-            )
-    else:
-        shutil.rmtree(run_ns, ignore_errors=True)
-        os.makedirs(store)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(4, spark.sparkContext.defaultParallelism)),
-        )
-        cols = [*group_cols, value_col]
-        if not resume:
-            df.select(*cols).repartition(n_batches).write.parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def write_delta(batch: DataFrame, batch_id: int) -> None:
+    def write_delta(batch: DataFrame, batch_id: int) -> None:
+        _store_batch(
             hll_md5_registers(
                 batch.filter(F.col(value_col).isNotNull()),
                 group_cols,
                 value_col,
-            ).write.mode("overwrite").parquet(
-                os.path.join(store, f"b{batch_id:05d}")
-            )
-            if on_batch_complete is not None:
-                on_batch_complete(batch_id)
-
-        (
-            stream.writeStream.foreachBatch(write_delta)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+            ),
+            store,
+            batch_id,
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+    cols = [*group_cols, value_col]
+    run_micro_batches(
+        spark, run_ns,
+        lambda src: (
+            df.select(*cols).repartition(n_batches).write.parquet(src)
+        ),
+        write_delta, caller="streaming_hll_run",
+        resume=resume, on_batch_complete=on_batch_complete,
+    )
     return (
         spark.read.parquet(os.path.join(store, "b*"))
         .groupBy(*group_cols, "bucket")

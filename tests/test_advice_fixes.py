@@ -4,8 +4,9 @@
     DROPPED (matching the SQL oracle's unnest semantics), not scored 0.0.
 (b) pq_topk / ivf_topk — missing query id raises a clear ValueError;
     zero-norm corpus vectors cannot poison distances with NaN.
-(c) incremental_upsert_run — the shuffle-partitions override is restored
-    even when setup fails before the stream starts.
+(c) streaming runs — the shuffle-partitions override (and ann_index's
+    extra overwrite-mode conf) is restored when setup fails before the
+    stream starts and when a batch fails mid-run.
 (d) sampling hashes — wrap-free DECIMAL(38,0) arithmetic keeps the
     engine bit-identical to Python/DuckDB for ids past the int64 wrap
     point (~3.47e9 for the Knuth multiplier).
@@ -92,17 +93,65 @@ def test_pq_topk_zero_norm_corpus_vector_is_not_nan(spark):
 # ------------------------------------------------------------------ (c)
 
 
+def _pinned_conf(spark, pins):
+    """Set *pins* on the session for the duration of a test, restoring
+    the previous values afterwards."""
+    prev = {k: spark.conf.get(k) for k in pins}
+    for k, v in pins.items():
+        spark.conf.set(k, v)
+    return prev
+
+
 def test_incremental_upsert_restores_shuffle_partitions_on_setup_failure(
     spark, tmp_path
 ):
     from etl_acordos_spark.streaming.events import incremental_upsert_run
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    # events frame lacking the expected columns → setup (select) throws
-    bad = spark.range(3).toDF("event_id")
-    with pytest.raises(Exception):
-        incremental_upsert_run(spark, bad, str(tmp_path), n_batches=2)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # a prior width the narrowed min(4, cores) can never equal, so a
+    # missing restore shows
+    prev = _pinned_conf(spark, {"spark.sql.shuffle.partitions": "7"})
+    try:
+        # events frame lacking the expected columns → setup (select) throws
+        bad = spark.range(3).toDF("event_id")
+        with pytest.raises(Exception):
+            incremental_upsert_run(spark, bad, str(tmp_path), n_batches=2)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        _pinned_conf(spark, prev)
+
+
+def test_ann_index_restores_conf_after_mid_run_failure(spark, tmp_path):
+    """A batch hook that raises kills the query mid-run; both the
+    narrowed shuffle width and ann_index's extra dynamic-overwrite conf
+    must be back at their prior values afterwards."""
+    from pyspark.sql.utils import StreamingQueryException
+
+    from etl_acordos_spark.streaming.ann_index import streaming_ann_index_run
+
+    # "static" is the lowercase spelling of the default, so it differs
+    # from both an unset key ("STATIC") and the run's "dynamic"
+    pins = {
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.sources.partitionOverwriteMode": "static",
+    }
+    prev = _pinned_conf(spark, pins)
+    try:
+        vecs = spark.createDataFrame(
+            [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(40)],
+            "vec_id long, embedding array<double>",
+        )
+
+        def crash(batch_id: int) -> None:
+            raise RuntimeError(f"injected failure after batch {batch_id}")
+
+        with pytest.raises(StreamingQueryException):
+            streaming_ann_index_run(
+                spark, vecs, "vec_id", "embedding", str(tmp_path),
+                n_batches=2, n_lists=4, on_batch_complete=crash,
+            )
+        assert {k: spark.conf.get(k) for k in pins} == pins
+    finally:
+        _pinned_conf(spark, prev)
 
 
 # ------------------------------------------------------------------ (d)

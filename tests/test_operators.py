@@ -206,7 +206,7 @@ def test_pq_recall_vs_exact_topk(spark, sf_oracle):
 def test_ivfpq_recall_vs_exact_topk(spark, sf_oracle):
     """IVF-PQ composite (round-7 VERDICT item 5): recall floors at
     least as tight as both singles (IVF >= 5, PQ >= 7 above). Measured
-    8/10 at sf0.01 with the default 4/16 probes and refine=8 — the IVF
+    9/10 at sf0.01 with the default 4/16 probes and refine=8 — the IVF
     pruning ceiling (neighbors outside probed cells are unreachable by
     construction); the floor leaves margin for testdata regeneration.
     Also deterministic end-to-end (fixed training prefix, fixed Lloyd

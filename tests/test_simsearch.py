@@ -119,7 +119,7 @@ def test_ann_recall_floors_on_clustered_hub_corpus(spark):
       gaps, so the shortlist is noise within the dense cluster;
     - the mitigation is quantizer resolution above the intra-cluster
       spread: m=32 (2-d subspaces), ks=64, train_n=512, refine=32 —
-      measured pq 8/10, ivfpq 9/10. That knob guidance is this test's
+      measured pq 8/10, ivfpq 10/10. That knob guidance is this test's
       payload; the floors pin it (>= the jittered-suite floors' 7/10,
       lsh 3/10).
 
@@ -168,7 +168,7 @@ def test_ann_recall_floors_on_clustered_hub_corpus(spark):
                 m=32, ks=64, train_n=512, refine=32,
             ).collect()
         }
-        # measured: ivf 10/10, lsh 10/10, pq 8/10, ivfpq 9/10
+        # measured: ivf 10/10, lsh 10/10, pq 8/10, ivfpq 10/10
         assert len(exact & ivf) >= 7, f"ivf recall {len(exact & ivf)}/10"
         assert len(exact & lsh) >= 3, f"lsh recall {len(exact & lsh)}/10"
         assert len(exact & pq) >= 7, f"pq recall {len(exact & pq)}/10"
@@ -262,42 +262,6 @@ def test_pq_quantized_recall_parity_on_hub_corpus(spark):
         }
         print(
             f"pq float recall {len(exact & flt)}/10,"
-            f" quantized {len(exact & quant)}/10"
-        )
-        assert len(exact & flt) >= 7, f"float {len(exact & flt)}/10"
-        assert len(exact & quant) >= 7, f"quantized {len(exact & quant)}/10"
-    finally:
-        vecs.unpersist()
-
-
-def test_ivfpq_quantized_recall_parity_on_hub_corpus(spark):
-    """`ext_simsearch_ivfpq` runs the quantized composite
-    (hash-verifiable); pin its recall on the adversarial fixture at the
-    float composite's floor using the same rescue knobs the float
-    floors test documents (m=32, ks=64, train 512, refine 32,
-    n_lists=32, n_probe=8)."""
-    from pyspark.sql import functions as F
-
-    from etl_acordos_spark.operators.simsearch import exact_topk, ivfpq_topk
-
-    vecs = _hub_heavy_corpus(spark, unit_range=True).cache()
-    try:
-        qvec = vecs.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-        exact = {
-            r["vec_id"]
-            for r in exact_topk(vecs, list(qvec), k=10, exclude_id=0).collect()
-        }
-        knobs = dict(
-            query_id=0, k=10, n_lists=32, n_probe=8,
-            m=32, ks=64, train_n=512, refine=32,
-        )
-        flt = {r["vec_id"] for r in ivfpq_topk(vecs, **knobs).collect()}
-        quant = {
-            r["vec_id"]
-            for r in ivfpq_topk(vecs, quantize=1 << 20, **knobs).collect()
-        }
-        print(
-            f"ivfpq float recall {len(exact & flt)}/10,"
             f" quantized {len(exact & quant)}/10"
         )
         assert len(exact & flt) >= 7, f"float {len(exact & flt)}/10"
