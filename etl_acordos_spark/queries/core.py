@@ -142,15 +142,15 @@ def q_snk_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_snk_dbapi_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched DBAPI upsert sink (SURVEY §2.1 snk_jdbc_upsert; reference
-    tasks/bronze.py:102-121 per-row UPDATE+INSERT → partition-batched
-    ``executemany`` upsert).
+    tasks/bronze.py:102-121 per-row UPDATE+INSERT → batched
+    ``executemany`` upsert from the driver).
 
     Demonstrated against SQLite (same DBAPI shape as the MariaDB driver):
     first writes every nation row with a STALE name, then upserts the real
     rows keyed on n_nationkey — the final table must equal `nation`
-    exactly, proving update-on-conflict semantics. One writer partition
-    here because SQLite is single-writer; a server database takes
-    ``writer_partitions=N``.
+    exactly, proving update-on-conflict semantics. The sink writes over
+    one driver connection; parallel bulk loads belong on
+    ``df.write.jdbc``.
     """
     db = os.path.join(scratch_dir(), "upsert_demo.sqlite")
     if os.path.exists(db):
@@ -176,9 +176,10 @@ def q_snk_dbapi_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_snk_dbapi_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched DBAPI append sink (SURVEY §2.1 snk_jdbc_append; reference
-    tasks/silver.py:95-139 DDL + per-row insert loop → partition-batched
-    ``executemany`` append). Rerun-stable: the demo table is dropped
-    before each run, matching the reference's CREATE-then-load shape."""
+    tasks/silver.py:95-139 DDL + per-row insert loop → batched
+    ``executemany`` append from the driver). Rerun-stable: the demo table
+    is dropped before each run, matching the reference's CREATE-then-load
+    shape."""
     db = os.path.join(scratch_dir(), "append_demo.sqlite")
     if os.path.exists(db):
         os.remove(db)

@@ -7,11 +7,12 @@ tasks/bronze.py:94-121, tasks/silver.py:95-139, tasks/gold.py:74-193).
 Spark-first re-expression:
   - DDL comes from the DataFrame's *typed* schema (StructType → SQL
     types), replacing the reference's name-based map (bronze.py:96).
-  - The upsert is a `foreachPartition` sink: each executor partition
-    opens ONE connection and issues batched ``executemany`` statements —
-    O(partitions) round-trips instead of O(rows). On a 1000-executor
-    cluster, `coalesce` the frame to the number of writer connections the
-    database can take.
+  - The upsert is written from the driver over ONE connection: the frame
+    is coalesced to one partition and streamed with ``toLocalIterator``
+    into batched ``executemany`` statements — O(rows / batch_size)
+    round-trips instead of O(rows), one commit, and no Python worker.
+  - Statements go through ``conn.cursor()`` (PEP 249), so drivers without
+    connection-level ``execute`` shortcuts (mariadb, pymysql) work.
   - Divergence (bug fix): sink errors propagate — the reference swallows
     bronze DB errors (tasks/bronze.py:123-124).
 
@@ -19,12 +20,16 @@ The connection factory is any zero-arg callable returning a DBAPI
 connection (sqlite3, mysql/mariadb driver, psycopg...), so the sink is
 testable without a database server. For plain replace/append semantics on
 a real JDBC database, prefer Spark's built-in ``df.write.jdbc`` — this
-custom sink exists because Spark has no native MERGE for JDBC.
+custom sink exists because Spark has no native MERGE for JDBC. The frame
+passes through the driver: one serialized partition sits in the JVM while
+Python streams it in ``batch_size`` batches, so a bulk load that outgrows
+the driver belongs on ``df.write.jdbc`` too.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from itertools import islice
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -164,7 +169,7 @@ def write_dbapi_upsert(
     connection_factory: Callable[[], Any],
     upsert_key: str,
     batch_size: int = 1000,
-    writer_partitions: int | None = None,
+    writer_partitions: int = 1,
     dialect: str = "ansi",
 ) -> None:
     """Batched upsert keyed on *upsert_key* (reference tasks/bronze.py:102-121,
@@ -183,7 +188,7 @@ def write_dbapi_append(
     table: str,
     connection_factory: Callable[[], Any],
     batch_size: int = 1000,
-    writer_partitions: int | None = None,
+    writer_partitions: int = 1,
     dialect: str = "ansi",
 ) -> None:
     """Batched append (reference tasks/silver.py:95-139 insert loops)."""
@@ -199,41 +204,36 @@ def _write_dbapi(
     connection_factory: Callable[[], Any],
     upsert_key: str | None,
     batch_size: int,
-    writer_partitions: int | None,
+    writer_partitions: int,
     dialect: str = "ansi",
 ) -> None:
-    columns = df.columns
-    sql = _insert_sql(table, columns, upsert_key, dialect)
-
-    # DDL once, driver-side, inside the same transaction discipline.
+    """DDL, then every row in ``executemany`` batches, then one commit —
+    all on one driver-side connection, closed in ``finally`` (an error
+    leaves the inserts uncommitted, and closing rolls them back).
+    *writer_partitions* is kept for its callers and must be 1.
+    """
+    if writer_partitions != 1:
+        raise ValueError(
+            f"writer_partitions={writer_partitions!r}: the DBAPI sink "
+            "writes through one driver connection; use df.write.jdbc for "
+            "parallel writers"
+        )
+    if batch_size < 1:
+        raise ValueError(f"batch_size must be >= 1, got {batch_size!r}")
+    sql = _insert_sql(table, df.columns, upsert_key, dialect)
     ddl = ddl_from_schema(
         table, df.schema, primary_key=upsert_key, dialect=dialect
     )
     conn = connection_factory()
     try:
-        conn.execute(ddl)
+        cur = conn.cursor()
+        cur.execute(ddl)
+        conn.commit()
+        # coalesce(1): a bare toLocalIterator runs one job per partition.
+        # A Row is a tuple in column order, so it binds as-is.
+        rows = df.coalesce(1).toLocalIterator()
+        while batch := list(islice(rows, batch_size)):
+            cur.executemany(sql, batch)
         conn.commit()
     finally:
         conn.close()
-
-    def sink_partition(rows) -> None:
-        conn = connection_factory()
-        try:
-            batch: list[tuple] = []
-            for row in rows:
-                batch.append(tuple(row[c] for c in columns))
-                if len(batch) >= batch_size:
-                    conn.executemany(sql, batch)
-                    batch.clear()
-            if batch:
-                conn.executemany(sql, batch)
-            conn.commit()
-        finally:
-            # Fail loudly: exceptions propagate and fail the Spark task
-            # (divergence from reference tasks/bronze.py:123-124 swallow).
-            conn.close()
-
-    out = df
-    if writer_partitions:
-        out = out.coalesce(writer_partitions)
-    out.foreachPartition(sink_partition)

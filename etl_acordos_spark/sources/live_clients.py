@@ -98,9 +98,8 @@ def mariadb_connection_factory(
     Resolution order: explicit *connect* (tests / custom drivers), the
     ``mariadb`` connector (qmark placeholders — pair with
     ``dialect="mariadb"``), then ``pymysql`` (format placeholders — pair
-    with ``dialect="mysql"``). The factory is executed once per writer
-    partition by the sink, so it must be picklable: only strings/ints are
-    captured.
+    with ``dialect="mysql"``). The sink calls the factory once, on the
+    driver, and runs every statement through ``conn.cursor()``.
     """
 
     def factory() -> Any:

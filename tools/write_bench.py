@@ -17,9 +17,9 @@ Usage::
 
 Method: min-of-RUNS wall time per path (RUNS via
 SPARK_GRAFT_BENCH_RUNS, default 2), fresh target dir per run; file
-counts from the final run. DBAPI paths write to SQLite with one writer
-partition (single-writer database — a server DB takes N partitions),
-so their rows/s anchor the PER-WRITER executemany throughput.
+counts from the final run. DBAPI paths write to SQLite over one
+driver-side connection, so their rows/s anchor single-connection
+executemany throughput.
 """
 
 from __future__ import annotations
