@@ -46,7 +46,11 @@ from etl_acordos_spark.sources.dbapi_sink import (
     write_dbapi_append,
     write_dbapi_upsert,
 )
-from etl_acordos_spark.sources.parquet_io import parquet_exists, write_parquet_layer
+from etl_acordos_spark.sources.parquet_io import (
+    parquet_exists,
+    read_parquet,
+    write_parquet_layer,
+)
 from etl_acordos_spark.sources.records import records_to_df
 from etl_acordos_spark.sources.text_io import (
     read_csv,
@@ -137,7 +141,7 @@ def q_snk_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = write_parquet_layer(
         t(spark, sf_dir, "region"), scratch_dir(), "gold", "region_roundtrip"
     )
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def q_snk_dbapi_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,15 +535,15 @@ def q_flow_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bronze = bronze_transform(raw, cfg)
     bronze_path = write_parquet_layer(bronze, base, "bronze", "pedidos")
-    silver = silver_transform(spark.read.parquet(bronze_path), cfg)
+    silver = silver_transform(read_parquet(spark, bronze_path), cfg)
     silver_path = write_parquet_layer(silver, base, "silver", "pedidos")
     gold = (
-        spark.read.parquet(silver_path)
+        read_parquet(spark, silver_path)
         .groupBy("ano", "status")
         .agg(F.count(F.lit(1)).alias("n_combos"))
     )
     gold_path = write_parquet_layer(gold, base, "gold", "pedidos")
-    return spark.read.parquet(gold_path)
+    return read_parquet(spark, gold_path)
 
 
 def q_flow_retry(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,9 +12,10 @@ Defaults are chosen for correctness-at-scale first:
   - UTC session timezone so timestamp semantics are stable across the
     cluster and reproducible against external oracles.
   - Arrow enabled for the Python boundary (Pandas UDFs, toPandas).
-  - shuffle partitions default to a local-friendly 32; a real cluster
-    deployment overrides via `extra_conf` (rule of thumb: 2-3x total
-    executor cores, with AQE coalescing the tail).
+  - shuffle partitions default to the local core count
+    (`SPARK_GRAFT_CPUS`, else 32); a real cluster deployment overrides
+    via `extra_conf` (rule of thumb: 2-3x total executor cores, with AQE
+    coalescing the tail).
 """
 
 from __future__ import annotations
@@ -23,7 +24,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else 48g clamped to the box's
+    physical RAM in whole GiB (rounded down)."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit is not None:
+        return explicit
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, ram >> 30)}g"
 
 
 def get_spark(
@@ -32,22 +41,23 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's default tuning."""
+    # read once, at call time, so master and shuffle width always agree
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )
     conf = {
-        "spark.sql.shuffle.partitions": DEFAULT_SHUFFLE_PARTITIONS,
+        "spark.sql.shuffle.partitions": cpus,
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.ui.enabled": "false",
-        # 48g default for tests/interactive work; bench.py intentionally
-        # pins 8g (bench.py, BASELINE.md neutrality check) so recorded
-        # timings aren't flattered by an oversized driver heap.
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        # 48g (clamped to RAM) for interactive work; tests/conftest.py,
+        # bench.py and perfbench pin 8g (BASELINE.md neutrality check) so
+        # recorded timings aren't flattered by an oversized driver heap.
+        "spark.driver.memory": _default_driver_memory(),
         # Files >128MB split into tasks; at 100 TB this keeps scan tasks
         # memory-bounded regardless of file layout.
         "spark.sql.files.maxPartitionBytes": "134217728",

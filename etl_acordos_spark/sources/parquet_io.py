@@ -10,14 +10,23 @@ Spark-first re-expression: `spark.read.parquet` / `df.write.parquet` —
 predicate pushdown, column pruning, and partition pruning come from
 Catalyst for free. Layer naming stays a path convention; on a cluster the
 same paths are `s3a://` URIs (hadoop-aws), nothing here changes.
+
+Layer reads take their schema from the writer. Spark records the frame's
+schema in every Parquet footer it writes; `read_parquet` reads that
+footer on the driver and passes the schema to the reader, so reading a
+layer back starts no schema-inference Spark job. Foreign-written files,
+hive-partitioned layers, merged schemas and object-store URIs (`s3a://`)
+still infer as `spark.read.parquet` does.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LAYER_PREFIXES = {"bronze": "brz", "silver": "slv", "gold": "gld"}
 
@@ -29,10 +38,85 @@ def layer_key(layer: str, name: str) -> str:
     return f"{layer}/{prefix}_{name}"
 
 
+# Footer key under which Spark's Parquet writer stores the row schema as
+# JSON (ParquetReadSupport.SPARK_METADATA_KEY).
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule for names a directory listing skips."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark's writer recorded for the table at *path*, or
+    ``None`` when Spark's own inference must run.
+
+    With ``mergeSchema`` off, Spark infers a schema from one footer: a
+    summary file if there is one, else a data file, where it takes the
+    writer's schema key verbatim. This reads the same key from the
+    lexicographically first data file, on the driver. Only a local,
+    absolute directory of data files qualifies; a URI (no local path), a
+    partition subdirectory (partition columns come from the directory
+    names), a summary file, ``mergeSchema=true`` and a footer without the
+    key all return ``None``.
+    """
+    if not os.path.isabs(path):
+        return None
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    try:
+        with os.scandir(path) as it:
+            entries = sorted(it, key=lambda e: e.name)
+    except OSError:  # missing, or a file rather than a directory
+        return None
+    data = []
+    for entry in entries:
+        if entry.name.startswith(("_metadata", "_common_metadata")):
+            return None
+        if _hidden(entry.name):
+            continue
+        if entry.is_dir():
+            return None
+        data.append(entry.path)
+    if not data:
+        return None
+    import pyarrow.parquet as pq
+
+    try:
+        footer = pq.read_metadata(data[0]).metadata or {}
+    except (OSError, ValueError):  # unreadable: let Spark report it
+        return None
+    raw = footer.get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    try:
+        return StructType.fromJson(json.loads(raw))
+    except ValueError:  # a legacy schema string Spark parses itself
+        return None
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Read a Parquet table (reference tasks/silver.py:32-34). Lazy —
-    filters/projections applied later are pushed into this scan."""
-    return spark.read.parquet(path)
+    filters/projections applied later are pushed into this scan.
+
+    The schema comes from the footer Spark wrote (see `_footer_schema`),
+    so the read starts no Spark job; Spark makes it nullable exactly as
+    it does an inferred one. Anything else falls back to
+    ``spark.read.parquet(path)`` and its inference job: files written by
+    another library, hive-partitioned layers, an empty directory,
+    ``spark.sql.parquet.mergeSchema=true``, and object-store or other
+    URIs (``s3a://``), whose footers are not read from the driver, and
+    relative paths. An absolute scheme-less path is read as a
+    driver-local file, as in local mode.
+    """
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
